@@ -31,6 +31,7 @@ from typing import Iterable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..jrpc import local_frame
 from . import FileIO, get_io, io_from_storage_options, parse_uri
 
 #: at or below this many files a remote read happens on the driver — the
@@ -539,7 +540,7 @@ def read_parquet(
             tables.append(t.cast(out_target))
         merged = (pa.concat_tables(tables) if tables
                   else out_target.empty_table())
-        return spark.createDataFrame(merged, schema=out_schema)
+        return local_frame(spark, merged, out_schema)
 
     opts = io0.storage_options()
     meta = spark.createDataFrame([(f,) for f in sorted(files)], "__path: string")

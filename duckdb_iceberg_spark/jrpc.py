@@ -21,6 +21,9 @@ These helpers move the same work through O(1)-round-trip channels:
   projection round-trip no matter how many columns.
 - :func:`jcol` — backtick-exact column reference through a memoized
   ``functions.col`` handle: 1 round-trip per column instead of ~9.
+- :func:`local_frame` — driver-known rows as an Arrow ``LocalRelation``
+  instead of a parallelized Python RDD: no Python-worker tasks each time
+  a plan that reads them executes.
 
 Everything returns ordinary pyspark objects; the resulting logical plans
 are identical to the chatty spellings (pinned by tests). Each helper
@@ -29,11 +32,14 @@ falls back to the public API if the private surface it relies on moves.
 
 from __future__ import annotations
 
+import datetime as _dt
+import functools as _functools
 import json as _json
 import weakref as _weakref
-from typing import Iterable, Sequence
+from typing import Any, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 #: per-SparkContext cache of JVM handles (mapper, classes, function
 #: members). WeakKey so a stopped/replaced context drops its entries.
@@ -147,3 +153,71 @@ def jexpr(sql: str):
 
         return F.expr(sql)
     return _wrap_column(fn(sql))
+
+
+@_functools.lru_cache(maxsize=256)
+def _ddl_struct_json(ddl: str) -> dict:
+    # the parse is a JVM call: once per distinct DDL string
+    from pyspark.sql.types import _parse_datatype_string
+
+    st = _parse_datatype_string(ddl)
+    if not isinstance(st, T.StructType):
+        raise TypeError(f"not a struct schema: {ddl!r}")
+    return st.jsonValue()
+
+
+def _ddl_struct(ddl: str) -> T.StructType:
+    """StructType for a DDL string (``"a string, b long"``); a fresh
+    object per call, since StructType.add mutates in place."""
+    return T.StructType.fromJson(_ddl_struct_json(ddl))
+
+
+def _local_ts(v):
+    # createDataFrame(list) reads a naive datetime as local wall time
+    # (TimestampType.toInternal uses time.mktime); Arrow would read it as
+    # UTC. Make it aware first so both spellings give the same instant.
+    if isinstance(v, _dt.datetime) and v.tzinfo is None:
+        return v.astimezone(_dt.timezone.utc)
+    return v
+
+
+def local_frame(spark: SparkSession, rows: Any,
+                schema: T.StructType | str) -> DataFrame:
+    """DataFrame over driver-known rows, planned as an Arrow
+    ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>)`` plans as a parallelized Python RDD:
+    every execution of a plan that reads it re-pickles the rows through
+    ``rdd.map``, which starts ``defaultParallelism`` Python-worker tasks.
+    The same rows shipped as a ``pyarrow.Table`` typed by ``schema`` plan
+    as a ``LocalRelation`` that Spark reads with no Python worker and no
+    job, and that carries a real size estimate for join planning.
+
+    ``rows``: tuples or ``Row``s in schema order, dicts keyed by field
+    name, or a ``pyarrow.Table`` already laid out as ``schema``.
+    ``schema``: a StructType or a DDL string. Naive datetimes in a
+    TimestampType column are local wall time, as in createDataFrame.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    st = _ddl_struct(schema) if isinstance(schema, str) else schema
+    if isinstance(rows, pa.Table):
+        return spark.createDataFrame(rows, st)
+    rows = list(rows)
+    names = st.fieldNames()
+    if rows and isinstance(rows[0], dict):
+        cols = [[r.get(n) for r in rows] for n in names]
+    else:
+        cols = [list(c) for c in zip(*rows)] if rows else [[] for _ in names]
+        if len(cols) != len(names):
+            raise ValueError(
+                f"rows have {len(cols)} fields, schema has {len(names)}")
+    arrow_schema = to_arrow_schema(st)
+    arrays = []
+    for f, col, af in zip(st.fields, cols, arrow_schema):
+        if isinstance(f.dataType, T.TimestampType):
+            col = [_local_ts(v) for v in col]
+        arrays.append(pa.array(col, type=af.type))
+    return spark.createDataFrame(
+        pa.Table.from_arrays(arrays, schema=arrow_schema), st)

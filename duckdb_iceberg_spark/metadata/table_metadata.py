@@ -114,10 +114,6 @@ class PartitionSpec:
             ],
         )
 
-    @property
-    def is_unpartitioned(self) -> bool:
-        return not [f for f in self.fields if f.transform != "void"]
-
 
 @dataclass
 class SortField:
@@ -280,12 +276,6 @@ class TableMetadata:
             return None
 
         return walk(self.schema_json(schema_id)["fields"], "")
-
-    def field_by_name(self, name: str, schema_id: int | None = None) -> Optional[dict]:
-        for f in self.schema_json(schema_id)["fields"]:
-            if f["name"] == name:
-                return f
-        return None
 
     def default_spec(self) -> PartitionSpec:
         return self.partition_specs[self.default_spec_id]

@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..jrpc import local_frame
 from .text import _lm_unkmap, laplace_lp6, lm_repartition_guard, lm_tokens
 
 __all__ = ["nb_quality_fit", "nb_quality_score"]
@@ -154,8 +155,7 @@ def nb_quality_score(
     w_t = T.StructType([
         T.StructField("w", T.StringType()),
         T.StructField("__w6", T.DecimalType(18, 6))])
-    wdf = spark.createDataFrame(
-        sorted(weights.items()), w_t)
+    wdf = local_frame(spark, sorted(weights.items()), w_t)
 
     corp = base.select(
         "__id", F.explode(_lm_unkmap(F.col("__t"), vocab)).alias("w"))

@@ -37,6 +37,7 @@ from typing import Iterable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -186,16 +187,6 @@ def bloom_dedup_incremental(
         .select(id_col)
     )
     return firsts.join(hits, id_col, "left_semi").drop("__fp")
-
-
-def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(fingerprint, n_dupes, keep_id) for groups with >1 member."""
-    return (
-        df.withColumn("fingerprint", doc_fingerprint(text_col))
-        .groupBy("fingerprint")
-        .agg(F.count(F.lit(1)).alias("n_dupes"), F.min(id_col).alias("keep_id"))
-        .filter(F.col("n_dupes") > 1)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -949,10 +940,12 @@ def incremental_minhash_dedup(
             # one sequential driver round-trip replaces the former two.
             # This branch (corpus_bands and corpus_signatures both None)
             # IS the rederive branch, so the fused batch frame exists —
-            # asserted locally so an edit to either branch condition
-            # fails loudly instead of leaving comb_b unmaterialized
-            # (ADVICE r15).
-            assert rederive, "shared barrier requires the fused batch side"
+            # checked locally (a raise, so ``python -O`` keeps it) so an
+            # edit to either branch condition fails loudly instead of
+            # leaving comb_b unmaterialized (ADVICE r15).
+            if not rederive:
+                raise RuntimeError(
+                    "shared barrier requires the fused batch side")
             comb_old.unionByName(comb_b).count()
             sig_old = comb_old.select(id_col, "signature")
         bo = banded_signatures(sig_old, id_col, bands) \
@@ -1331,13 +1324,13 @@ def connected_components(
             canon.unpersist()
             comp = _union_find_min(head)
             if not comp:
-                return spark.createDataFrame([], "node long, component long")
-            pdf = pd.DataFrame(
+                return _jx.local_frame(spark, [], "node long, component long")
+            table = pa.table(
                 {"node": np.fromiter(comp.keys(), dtype=np.int64,
                                      count=len(comp)),
                  "component": np.fromiter(comp.values(), dtype=np.int64,
                                           count=len(comp))})
-            return spark.createDataFrame(pdf)
+            return _jx.local_frame(spark, table, "node long, component long")
     # eager=False fuses the checkpoint's materialization into the
     # star-forest check that immediately follows: the check's action
     # computes AND stores the frame in one job instead of two

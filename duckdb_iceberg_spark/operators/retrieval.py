@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..jrpc import local_frame
 from .exactmath import dec_ln_int, q6
 from .text import lm_repartition_guard, lm_tokens
 
@@ -106,8 +107,8 @@ def bm25_topk(
         else:
             dfs[r["__w"]] = r["a"]
     if n_docs == 0:
-        return df.sparkSession.createDataFrame(
-            [], T.StructType([
+        return local_frame(
+            df.sparkSession, [], T.StructType([
                 T.StructField(id_col, T.LongType()),
                 T.StructField("n_matched", T.LongType()),
                 T.StructField("score_micro", T.LongType())]))
@@ -118,8 +119,8 @@ def bm25_topk(
                F.min("__dl").alias("__dl")))
     idf_rows = [(w, int(bm25_idf6(n_docs, dfs.get(w, 0)) * 1_000_000))
                 for w in terms]
-    idf = df.sparkSession.createDataFrame(
-        idf_rows, "`__w` string, `__idf_u` long")
+    idf = local_frame(
+        df.sparkSession, idf_rows, "`__w` string, `__idf_u` long")
 
     dec = "decimal(38,0)"
     # dlr = round_half_up(dl·N·1e6 / T) — 6dp-quantized length norm

@@ -33,6 +33,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from ..jrpc import local_frame
+
 
 def sample_threshold_hex(fraction: float, digits: int = 6) -> str:
     """Lexicographic keep-threshold: the first ``digits`` hex chars of
@@ -300,8 +302,8 @@ def cluster_temperature_sample(
     except BaseException:
         df.unpersist()
         raise
-    thr_df = df.sparkSession.createDataFrame(
-        thr_rows, f"{size_col} long, __thr string")
+    thr_df = local_frame(
+        df.sparkSession, thr_rows, f"{size_col} long, __thr string")
     hexpfx = F.substring(
         F.md5(F.concat(F.col(key_col).cast("string"), F.lit(salt))),
         1, digits)
@@ -339,40 +341,6 @@ def pack_sequences(
     out = out.withColumn("bin_offset", offset.cast("long"))
     return out.withColumn(
         "bin", F.floor(F.col("bin_offset") / budget).cast("long"))
-
-
-def quantile_filter(
-    df: DataFrame,
-    value_col: str,
-    q: float,
-    by: str | list[str] | None = None,
-    keep: str = "above",
-) -> DataFrame:
-    """Keep rows at or beyond the per-group EXACT interpolated quantile
-    of ``value_col`` — the "drop the bottom q of each language by
-    quality/token-count" curation pass. ``keep='above'`` keeps rows with
-    value >= the q-quantile, ``'below'`` keeps value <= it.
-
-    The threshold is Spark's exact ``percentile`` (= ANSI
-    ``quantile_cont``/``percentile_cont``), so any SQL engine reproduces
-    the same cut — no approx-sketch drift across engines or reruns.
-
-    Scale: one per-group aggregation (group-count output rows) whose
-    result broadcasts back onto the scan — the filter itself adds no
-    second shuffle. Exact percentile sorts inside the aggregation
-    buffer; fine for per-group cardinalities (docs per language), switch
-    to approx_percentile for trillion-row single groups and drop the
-    cross-engine claim."""
-    if keep not in ("above", "below"):
-        raise ValueError(f"keep must be 'above' or 'below', got {keep!r}")
-    gcols = [by] if isinstance(by, str) else list(by or [])
-    thr = df.groupBy(*gcols).agg(
-        F.percentile(F.col(value_col), F.lit(float(q))).alias("__thr"))
-    joined = (df.join(F.broadcast(thr), gcols) if gcols
-              else df.crossJoin(F.broadcast(thr)))
-    cond = (F.col(value_col) >= F.col("__thr") if keep == "above"
-            else F.col(value_col) <= F.col("__thr"))
-    return joined.filter(cond).drop("__thr")
 
 
 def cap_per_source(
@@ -540,8 +508,7 @@ def dsir_probe(
     rows = ([("bucket_cr", str(b), int(c)) for b, c in cr.items()]
             + [("bucket_ct", str(b), int(c)) for b, c in ct.items()])
     spark = df.sparkSession
-    side = spark.createDataFrame(
-        rows, schema="metric string, k string, v long")
+    side = local_frame(spark, rows, "metric string, k string, v long")
     doc_u32 = df.select(
         F.lit("doc_u32").alias("metric"),
         F.col(id_col).cast("string").alias("k"),
@@ -689,8 +656,8 @@ def dsir_importance_weights(
     if cache_out is not None:
         cache_out.append(pb)
     lr = dsir_log_ratios(ct, cr, buckets)
-    ratio = spark.createDataFrame(
-        lr, schema=T.StructType([
+    ratio = local_frame(
+        spark, lr, T.StructType([
             T.StructField("__b", T.LongType()),
             T.StructField("__lr", T.DecimalType(18, 6))]))
 
@@ -800,7 +767,7 @@ def dsir_resample(
         for c in cache:
             c.unpersist()
     res = (
-        df.sparkSession.createDataFrame(rows, out.schema)
+        local_frame(df.sparkSession, rows, out.schema)
         .orderBy(F.col("score").desc(), F.col(id_col).asc())
     )
     if micro_units:

@@ -20,6 +20,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..jrpc import local_frame
+
 # marker words per language, chosen for testdata's en/de/fr/es-ish content;
 # counted as substring hits on the space-padded lowercased text
 _LANG_MARKERS: dict[str, list[str]] = {
@@ -39,15 +41,6 @@ def token_count(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     t = F.trim(c)
     return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, r"\s+"))).cast("long")
-
-
-def word_punct_token_count(col: Column | str) -> Column:
-    """BPE-ish token count: words, numbers, and punctuation runs counted
-    separately (regexp-extracted, JVM-side)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.size(
-        F.regexp_extract_all(c, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), F.lit(0))
-    ).cast("long")
 
 
 def _tokens(col: Column) -> Column:
@@ -894,8 +887,7 @@ def lm_probe(
         + [("bigram", g, int(c)) for g, c in c2map.items()]
         + [("ctx", w1, int(c1)) for w1, c1 in c1map.items()]
     )
-    side = spark.createDataFrame(
-        side_rows, schema="metric string, k string, v long")
+    side = local_frame(spark, side_rows, "metric string, k string, v long")
     return doc_toks.unionByName(side).orderBy("metric", "k")
 
 
@@ -962,10 +954,12 @@ def ngram_lm_score(
         T.StructField("w1", T.StringType()),
         T.StructField("__lp1", T.DecimalType(18, 6))])
     spark = df.sparkSession
-    model_lp = spark.createDataFrame(
+    model_lp = local_frame(
+        spark,
         [(g, laplace_lp6(c, c1map[g.split(" ", 1)[0]], n_vocab))
          for g, c in c2map.items()], lp_t)
-    ctx_lp = spark.createDataFrame(
+    ctx_lp = local_frame(
+        spark,
         [(w1, laplace_lp6(0, c1, n_vocab)) for w1, c1 in c1map.items()],
         ctx_t)
     unseen = laplace_lp6(0, 0, n_vocab)

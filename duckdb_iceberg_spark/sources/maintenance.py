@@ -22,6 +22,7 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
+from ..jrpc import local_frame
 from ..metadata import manifest as mf
 from ..metadata.table_metadata import (
     TableMetadata,
@@ -800,8 +801,8 @@ def rewrite_position_delete_files(
             _read_delete_files(spark, by_path, "file_path string, pos long")
             .select(_norm_path(F.col("file_path")).alias("file_path"),
                     "pos"))
-        live_df = F.broadcast(spark.createDataFrame(
-            [(p,) for p in sorted(live)], "file_path: string"))
+        live_df = F.broadcast(local_frame(
+            spark, [(p,) for p in sorted(live)], "file_path: string"))
         kept = rows.join(live_df, "file_path", "left_semi").distinct()
         kept_n = kept.count()
         # duplicates across stacked delete files collapse in the distinct —

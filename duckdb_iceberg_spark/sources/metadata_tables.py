@@ -20,6 +20,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..jrpc import local_frame
 from ..metadata import manifest as mf
 from ..metadata import types as ice_types
 from ..metadata.table_metadata import load_table_metadata
@@ -58,7 +59,7 @@ def iceberg_snapshots(spark: SparkSession, path: str) -> DataFrame:
         )
         for s in tm.snapshots
     ]
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def describe_table(spark: SparkSession, path: str) -> DataFrame:
@@ -103,7 +104,7 @@ def describe_table(spark: SparkSession, path: str) -> DataFrame:
                 _walk(f["type"]["fields"], name + ".")
 
     _walk(tm.schema_json()["fields"], "")
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def iceberg_metadata(spark: SparkSession, path: str, **scan_opts) -> DataFrame:
@@ -158,7 +159,7 @@ def iceberg_metadata(spark: SparkSession, path: str, **scan_opts) -> DataFrame:
                         e.data_file.file_size_in_bytes,
                     )
                 )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def iceberg_column_stats(spark: SparkSession, path: str, **scan_opts) -> DataFrame:
@@ -214,7 +215,7 @@ def iceberg_column_stats(spark: SparkSession, path: str, **scan_opts) -> DataFra
                             e.file_sequence_number,
                         )
                     )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def _render(t: Any, b: bytes | None) -> str | None:
@@ -283,7 +284,7 @@ def iceberg_partition_stats(spark: SparkSession, path: str, **scan_opts) -> Data
                         summ.contains_nan,
                     )
                 )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def iceberg_refs(spark: SparkSession, path: str) -> DataFrame:
@@ -302,7 +303,7 @@ def iceberg_refs(spark: SparkSession, path: str) -> DataFrame:
          r.get("max-ref-age-ms"))
         for name, r in sorted(tm.refs.items())
     ]
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def iceberg_history(spark: SparkSession, path: str) -> DataFrame:
@@ -332,4 +333,4 @@ def iceberg_history(spark: SparkSession, path: str) -> DataFrame:
         )
         for e in tm.snapshot_log
     ]
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)

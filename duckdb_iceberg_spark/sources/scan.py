@@ -493,7 +493,7 @@ def scan_to_dataframe(
 ) -> DataFrame:
     schema = plan.spark_schema()
     if not plan.tasks:
-        df = spark.createDataFrame([], schema)
+        df = _jx.local_frame(spark, [], schema)
         if with_file_info:
             df = df.withColumn("filename", F.lit(None).cast(T.StringType())) \
                    .withColumn("file_row_number", F.lit(None).cast(T.LongType()))
@@ -1055,7 +1055,7 @@ def _apply_initial_defaults(
         [T.StructField("__def_file", T.StringType())]
         + [T.StructField(f"__def_{i}", T.BooleanType())
            for i in range(len(defaulted))])
-    flag_df = spark.createDataFrame(rows, schema)
+    flag_df = _jx.local_frame(spark, rows, schema)
     df = df.join(F.broadcast(flag_df),
                  _jx.jexpr(_FILE_COL + " = __def_file"), "left")
     for i, (fpath, f) in enumerate(defaulted):
@@ -1125,7 +1125,7 @@ def _apply_partition_constants(spark: SparkSession, df: DataFrame, plan: ScanPla
     fields_schema = [T.StructField("__pc_file", T.StringType())]
     for col, ice_t, _ in fields:
         fields_schema.append(T.StructField("__pc_" + col, ice_types.iceberg_to_spark(ice_t)))
-    const_df = spark.createDataFrame(rows, T.StructType(fields_schema))
+    const_df = _jx.local_frame(spark, rows, T.StructType(fields_schema))
     orig_cols = df.columns
     df = df.join(F.broadcast(const_df),
                  _jx.jexpr(_FILE_COL + " = __pc_file"), "left")
@@ -1182,14 +1182,12 @@ def _apply_positional_deletes(spark: SparkSession, df: DataFrame, plan: ScanPlan
         del_df = del_df.unionByName(p)
     # broadcast only when the manifests say the delete side is small; a
     # 100 TB table's delete files can exceed executor memory, where the
-    # anti-join should shuffle (AQE decides from real sizes)
+    # anti-join must shuffle
     total_del_rows = sum(
         int(d.record_count or 0)
         for t in plan.tasks for d in t.positional_deletes)
-    if total_del_rows <= _DELETE_BROADCAST_MAX_ROWS:
-        del_df = del_df.hint("broadcast")
     return df.join(
-        del_df,
+        _delete_side_hint(del_df, total_del_rows <= _DELETE_BROADCAST_MAX_ROWS),
         _jx.jexpr(_FILE_COL + " = __del_file AND " + _POS_COL + " = __del_pos"),
         "left_anti",
     )
@@ -1206,6 +1204,16 @@ _DELETE_BROADCAST_MAX_ROWS = 20_000_000
 _EQ_DELETE_BROADCAST_MAX_ROWS = _DELETE_BROADCAST_MAX_ROWS
 
 
+def _delete_side_hint(side: DataFrame, broadcast: bool) -> DataFrame:
+    """Join-strategy hint for a delete anti-join's build side: broadcast
+    under the manifest-row guard, an explicit sort-merge join above it.
+    Both are asked for, not left to Catalyst: a side built over Arrow
+    ``LocalRelation`` leaves carries a small size estimate, so without
+    the merge hint Spark would broadcast a side the manifests call too
+    large for executor memory."""
+    return side.hint("broadcast" if broadcast else "merge")
+
+
 def _dv_positions_df(spark: SparkSession, dv_blobs: dict[str, "mf.DataFile"]) -> DataFrame:
     """Decode Puffin deletion vectors into a (__del_file, __del_pos)
     DataFrame. Few blobs: decoded on the driver (bitmaps are KB-sized) and
@@ -1219,20 +1227,23 @@ def _dv_positions_df(spark: SparkSession, dv_blobs: dict[str, "mf.DataFile"]) ->
              int(d.content_size_in_bytes or 0)) for ref, d in sorted(dv_blobs.items())]
 
     if len(meta) <= _DV_DRIVER_DECODE_MAX:
+        import pyarrow as pa
+
         from ..metadata.puffin import read_dv_positions
 
-        frames = []
+        refs, positions = [], []
         for ref, path, offset, length in meta:
-            pos = read_dv_positions(path, offset if length else None,
-                                    length if length else None, ref)
-            frames.append(pd.DataFrame(
-                {"__del_file": ref,
-                 "__del_pos": np.asarray(pos, dtype=np.int64)}))
-        pdf = (pd.concat(frames, ignore_index=True) if frames
-               else pd.DataFrame({"__del_file": pd.Series(dtype="object"),
-                                  "__del_pos": pd.Series(dtype="int64")}))
-        return spark.createDataFrame(
-            pdf, "`__del_file` string, `__del_pos` long")
+            pos = np.asarray(read_dv_positions(
+                path, offset if length else None,
+                length if length else None, ref), dtype=np.int64)
+            refs.append(pa.array(np.full(len(pos), ref, dtype=object),
+                                 pa.string()))
+            positions.append(pa.array(pos, pa.int64()))
+        table = pa.table({
+            "__del_file": pa.chunked_array(refs, pa.string()),
+            "__del_pos": pa.chunked_array(positions, pa.int64())})
+        return _jx.local_frame(
+            spark, table, "`__del_file` string, `__del_pos` long")
     from ..io import parse_uri, register_io, storage_options_for
     from ..io import io_from_storage_options
 
@@ -1310,10 +1321,12 @@ def _apply_equality_deletes(spark: SparkSession, df: DataFrame, plan: ScanPlan) 
         return df
 
     all_files = {t.data_file.file_path for t in plan.tasks}
-    seq_rows = [(_norm_path_py(t.data_file.file_path),
-                 int(t.sequence_number or 0)) for t in plan.tasks]
-    data_seq = spark.createDataFrame(
-        seq_rows, "`__ds_file` string, `__data_seq` long").dropDuplicates()
+    # one row per (normalized path, seq): deduped on the driver, not
+    # with a shuffle
+    seq_rows = sorted({(_norm_path_py(t.data_file.file_path),
+                        int(t.sequence_number or 0)) for t in plan.tasks})
+    data_seq = _jx.local_frame(
+        spark, seq_rows, "`__ds_file` string, `__data_seq` long")
     df = df.join(F.broadcast(data_seq),
                  _jx.jexpr(_FILE_COL + " = __ds_file"), "left").drop("__ds_file")
 
@@ -1334,15 +1347,14 @@ def _apply_equality_deletes(spark: SparkSession, df: DataFrame, plan: ScanPlan) 
         # broadcast the key set only when the manifests say it is small
         # (mirrors the positional-delete guard above). A CDC-heavy table's
         # accumulated equality deletes can be tens of GB; forcing a broadcast
-        # there OOMs executors — let AQE pick a shuffled anti-join instead
+        # there OOMs executors — shuffle the anti-join instead
         # (reference streams them: iceberg_multi_file_reader.cpp:525-558).
-        sig_del_rows = sum(
-            int(d.record_count or 0) for d, _, _ in files.values())
-        maybe_broadcast = (
-            (lambda k: k.hint("broadcast"))
-            if sig_del_rows <= _EQ_DELETE_BROADCAST_MAX_ROWS
-            else (lambda k: k))
-        del_meta = spark.createDataFrame(
+        # A broadcast key side keeps its duplicates: a left-anti join's
+        # result does not depend on them, and dropping them costs a shuffle.
+        broadcast = sum(int(d.record_count or 0) for d, _, _ in files.values()
+                        ) <= _EQ_DELETE_BROADCAST_MAX_ROWS
+        del_meta = _jx.local_frame(
+            spark,
             [(_norm_path_py(p), int(seq))
              for p, (_, seq, _) in sorted(files.items())],
             "`__del_file` string, `__del_seq` long")
@@ -1356,34 +1368,36 @@ def _apply_equality_deletes(spark: SparkSession, df: DataFrame, plan: ScanPlan) 
         alias = {c: f"__eq_k{i}" for i, c in enumerate(cols)}
         if is_global:
             keys = keys.select(
-                *[F.col(c).alias(alias[c]) for c in cols], "__del_seq"
-            ).dropDuplicates()
+                *[F.col(c).alias(alias[c]) for c in cols], "__del_seq")
+            if not broadcast:
+                keys = keys.dropDuplicates()
             eq_cond = None
             for c in cols:
                 piece = df[c].eqNullSafe(keys[alias[c]])
                 eq_cond = piece if eq_cond is None else (eq_cond & piece)
-            df = df.join(maybe_broadcast(keys),
+            df = df.join(_delete_side_hint(keys, broadcast),
                          eq_cond & (keys["__del_seq"] > df["__data_seq"]),
                          "left_anti")
         else:
             pairs = [(_norm_path_py(p), _norm_path_py(target))
                      for p, (_, _, applicable) in files.items()
                      for target in applicable]
-            pair_df = spark.createDataFrame(
-                pairs, "`__p_del` string, `__p_data` string")
+            pair_df = _jx.local_frame(
+                spark, pairs, "`__p_del` string, `__p_data` string")
             keys = (
                 keys.join(F.broadcast(pair_df),
                           F.col("__del_file") == F.col("__p_del"))
                 .select(*[F.col(c).alias(alias[c]) for c in cols],
                         "__del_seq", F.col("__p_data"))
-                .dropDuplicates()
             )
+            if not broadcast:
+                keys = keys.dropDuplicates()
             eq_cond = None
             for c in cols:
                 piece = df[c].eqNullSafe(keys[alias[c]])
                 eq_cond = piece if eq_cond is None else (eq_cond & piece)
             df = df.join(
-                maybe_broadcast(keys),
+                _delete_side_hint(keys, broadcast),
                 eq_cond & (keys["__del_seq"] > df["__data_seq"])
                 & (df[_FILE_COL] == keys["__p_data"]),
                 "left_anti")
@@ -1402,8 +1416,8 @@ def _add_row_lineage(spark: SparkSession, df: DataFrame, plan: ScanPlan) -> Data
         (_norm_path_py(t.data_file.file_path), t.first_row_id, t.sequence_number)
         for t in plan.tasks
     ]
-    map_df = spark.createDataFrame(
-        rows, T.StructType([
+    map_df = _jx.local_frame(
+        spark, rows, T.StructType([
             T.StructField("__rl_file", T.StringType()),
             T.StructField("__rl_first_row_id", T.LongType()),
             T.StructField("__rl_seq", T.LongType()),

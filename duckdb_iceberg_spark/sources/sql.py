@@ -31,6 +31,7 @@ from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..jrpc import local_frame
 from .scan import iceberg_scan
 
 # per-session registry of live views: lowercased view name ->
@@ -275,8 +276,8 @@ def _result_df(spark: SparkSession, op: str, view: str, tm: Any) -> DataFrame:
                                        - int(summ["total-records"]))
         except (TypeError, ValueError, KeyError):
             rows = None
-    return spark.createDataFrame(
-        [(op, view, snap_id, rows)],
+    return local_frame(
+        spark, [(op, view, snap_id, rows)],
         "operation string, target string, snapshot_id long, rows long")
 
 
@@ -1206,4 +1207,4 @@ def _exec_call(spark: SparkSession, stmt: str) -> DataFrame:
             out = {"result": out}
     cols = sorted(out)
     row = [tuple(str(out[c]) for c in cols)]
-    return spark.createDataFrame(row, ", ".join(f"{c}: string" for c in cols))
+    return local_frame(spark, row, ", ".join(f"{c}: string" for c in cols))

@@ -33,6 +33,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..jrpc import local_frame
 from ..metadata.table_metadata import TableMetadata, load_table_metadata
 from ..plans.scan_plan import ScanPlan, plan_scan
 from ..sources.scan import scan_to_dataframe
@@ -153,7 +154,7 @@ def changelog_scan(
         if schema is None:
             snap0 = tm.select_snapshot()
             schema = plan_scan(tm, snap0).spark_schema() if snap0 else None
-        base = spark.createDataFrame([], schema) if schema is not None \
+        base = local_frame(spark, [], schema) if schema is not None \
             else spark.range(0).drop("id")
         return base.select(
             "*",

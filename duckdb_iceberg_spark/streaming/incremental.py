@@ -14,6 +14,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..jrpc import local_frame
 from ..metadata.table_metadata import TableMetadata, load_table_metadata
 from ..plans.scan_plan import ScanPlan, plan_scan
 from ..sources.scan import scan_to_dataframe
@@ -90,5 +91,5 @@ def incremental_scan(
                                on_non_append=on_non_append)
     plan = incremental_tasks(tm, snaps)
     if not plan.tasks:
-        return spark.createDataFrame([], plan.spark_schema())
+        return local_frame(spark, [], plan.spark_schema())
     return scan_to_dataframe(spark, plan)

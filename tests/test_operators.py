@@ -594,6 +594,33 @@ def test_incremental_minhash_dedup(spark):
     assert got_sig == out and got_band == out and got_fp_only == out
 
 
+def test_incremental_minhash_barrier_guard_survives_optimize(spark):
+    """The shared-barrier invariant is a raise, not an assert: with the
+    ``rederive`` condition patched to disagree with the branch and the
+    function compiled as ``python -O`` compiles it (asserts stripped),
+    the branch still refuses instead of running on an unbuilt frame."""
+    import inspect
+    import textwrap
+
+    from duckdb_iceberg_spark.operators import dedup
+
+    src = textwrap.dedent(inspect.getsource(dedup.incremental_minhash_dedup))
+    cond = "rederive = corpus_bands is None and corpus_signatures is None"
+    assert src.count(cond) == 1
+    ns = dict(vars(dedup))
+    exec(compile(src.replace(cond, "rederive = False"), dedup.__file__,
+                 "exec", optimize=1), ns)
+    docs = spark.range(4).selectExpr(
+        "id AS doc_id", "concat('some shared words doc ', id) AS text")
+    try:
+        with pytest.raises(RuntimeError, match="shared barrier"):
+            ns["incremental_minhash_dedup"](
+                docs.filter("doc_id >= 2"), docs.filter("doc_id < 2"),
+                num_hashes=16, bands=4)
+    finally:
+        spark.catalog.clearCache()
+
+
 def test_kmeans_recovers_separated_clusters(spark):
     from duckdb_iceberg_spark.operators.clustering import kmeans
 
