@@ -5,13 +5,14 @@ must COPY data through the engine).
 
 Spark-first shape:
 
-- the import is METADATA-ONLY: per-file footer stats (row counts, typed
-  min/max bounds, null counts) become manifest entries, so partition and
-  zone-map pruning work on imported files exactly as on written ones;
-- footer-stat collection fans out to executors above the same 64-file
-  cutoff the schema sniffer uses (one mapInPandas over the path list) —
-  importing a million-file lake never serializes footer reads on the
-  driver;
+- the import is METADATA-ONLY: per-file footer stats become manifest
+  entries through the writer's own stats path and DataFile builder, so
+  partition and zone-map pruning work on imported files exactly as on
+  written ones, and the table's ``write.metadata.metrics.*`` modes apply
+  (like Java Iceberg's ``add_files``, which uses the table MetricsConfig);
+- footer-stat collection fans out to executors above the writer's
+  ``_DISTRIBUTED_STATS_THRESHOLD`` — importing a million-file lake never
+  serializes footer reads on the driver;
 - imported files usually carry NO parquet field-ids, so the import sets
   ``schema.name-mapping.default`` (built from the table schema) and the
   scan's existing name-mapping fallback reads them by name — schema
@@ -25,20 +26,14 @@ from __future__ import annotations
 
 import glob as _glob
 import os
-import urllib.parse as _url
 from typing import Any, Iterable
 
 from pyspark.sql import SparkSession
 
-from ..metadata import manifest as mf
 from ..metadata import types as ice_types
-from ..metadata.table_metadata import TableMetadata, load_table_metadata
-from .writer import commit_snapshot, create_table, current_version_number
-
-#: same executor fan-out cutoff the schema sniffer uses
-_STATS_DRIVER_MAX = 64
-
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+from ..metadata.table_metadata import load_table_metadata
+from .writer import (_build_data_files, _collect_stats, commit_snapshot,
+                     create_table, current_version_number)
 
 
 def _resolve_files(source: str | Iterable[str]) -> list[str]:
@@ -58,43 +53,6 @@ def _resolve_files(source: str | Iterable[str]) -> list[str]:
     return hits
 
 
-def _parse_hive_partition(path: str, wanted: dict[str, str]) -> dict[str, Any]:
-    """``…/lang=en/part-0.parquet`` → {"lang": "en"} for the identity
-    partition columns in ``wanted`` (name → iceberg type). Values parse by
-    type; the hive NULL sentinel maps to None. Missing keys raise — a
-    partitioned table must not silently import unpartitioned files."""
-    vals: dict[str, Any] = {}
-    for seg in path.split("/")[:-1]:
-        if "=" not in seg:
-            continue
-        k, _, raw = seg.partition("=")
-        if k not in wanted:
-            continue
-        raw = _url.unquote(raw)
-        if raw == _HIVE_NULL:
-            vals[k] = None
-            continue
-        t = ice_types.primitive_name(wanted[k])
-        if t == "int" or t == "long":
-            vals[k] = int(raw)
-        elif t in ("float", "double"):
-            vals[k] = float(raw)
-        elif t == "boolean":
-            vals[k] = raw.lower() == "true"
-        elif t == "date":
-            import datetime as _dt
-
-            vals[k] = _dt.date.fromisoformat(raw)
-        else:
-            vals[k] = raw
-    missing = set(wanted) - set(vals)
-    if missing:
-        raise ValueError(
-            f"add_files: path {path!r} carries no hive-style value for "
-            f"partition column(s) {sorted(missing)}")
-    return vals
-
-
 #: iceberg primitive families whose parquet footer min/max convert safely
 #: to spec bounds. Skipped, conservative (a file without bounds is
 #: scanned, never mis-pruned): decimal/binary/fixed/uuid/time (encoding
@@ -106,140 +64,6 @@ def _parse_hive_partition(path: str, wanted: dict[str, str]) -> dict[str, Any]:
 #: lower-prefix / incremented-upper.
 _BOUND_SAFE = {"boolean", "int", "long", "string",
                "date", "timestamp", "timestamptz"}
-
-
-def _footer_stats(path: str, fields: list[tuple[str, int, str]]) -> dict:
-    """One file's footer → row count, size, and per-field (null count,
-    min, max) keyed by field id. ``fields`` = (name, field_id, ice_type)
-    for the table's top-level primitive columns. Module-level so the
-    executor fan-out ships only this function."""
-    import pyarrow.parquet as pq
-
-    from ..io import get_io
-    from ..io.arrow_data import _open_arrow_input
-
-    md = pq.ParquetFile(_open_arrow_input(get_io(path), path)).metadata
-    want = {name: (fid, it) for name, fid, it in fields}
-    nulls: dict[int, int] = {}
-    los: dict[int, Any] = {}
-    his: dict[int, Any] = {}
-    skip: set[int] = set()
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            name = col.path_in_schema
-            if name not in want:
-                continue
-            fid, it = want[name]
-            st = col.statistics
-            if st is None:
-                skip.add(fid)
-                continue
-            if st.null_count is not None and fid not in skip:
-                nulls[fid] = nulls.get(fid, 0) + st.null_count
-            if (ice_types.primitive_name(it) in _BOUND_SAFE
-                    and st.has_min_max):
-                lo, hi = st.min, st.max
-                if fid not in los or lo < los[fid]:
-                    los[fid] = lo
-                if fid not in his or hi > his[fid]:
-                    his[fid] = hi
-            else:
-                skip.add(fid)
-    for fid in skip:  # a single stats-less row group poisons the column
-        los.pop(fid, None)
-        his.pop(fid, None)
-        nulls.pop(fid, None)
-    return {"path": path, "rows": md.num_rows, "size": _file_size(path),
-            "nulls": nulls, "lo": los, "hi": his}
-
-
-def _file_size(path: str) -> int:
-    from ..io import get_io
-
-    try:
-        return get_io(path).size(path)
-    except (AttributeError, OSError, NotImplementedError):
-        try:
-            return os.path.getsize(path)
-        except OSError:
-            return 0
-
-
-def _collect_stats(spark: SparkSession, files: list[str],
-                   fields: list[tuple[str, int, str]]) -> list[dict]:
-    """Footer stats per imported file — parallel mapInPandas above the
-    driver threshold, driver-side below it. Scale note (VERDICT r12): the
-    collect() is O(#files) compact JSON stat strings, the SAME order as
-    the manifest entries the driver must author from them anyway —
-    add_files cannot commit without driver-side entries, so this bound is
-    inherent to the import, not an implementation shortcut (mirrors
-    writer.py's manifest-authoring scale notes)."""
-    from ..io import get_io, io_from_storage_options, storage_options_for
-
-    if not get_io(files[0]).shippable or len(files) <= _STATS_DRIVER_MAX:
-        return [_footer_stats(f, fields) for f in files]
-    import json as _json
-
-    import pandas as pd
-
-    opts = storage_options_for(files[0])
-    from ..io import parse_uri
-
-    scheme = parse_uri(files[0])[0]
-    flds = list(fields)
-
-    def batches(it):
-        # absolute imports + io registration: runs in executor workers
-        from duckdb_iceberg_spark.io import (io_from_storage_options,
-                                             register_io)
-        from duckdb_iceberg_spark.sources.add_files import _footer_stats
-
-        if scheme and opts:
-            register_io(scheme, io_from_storage_options(opts))
-        for pdf in it:
-            out = []
-            for p in pdf["path"]:
-                s = _footer_stats(p, flds)
-                out.append(_json.dumps(
-                    {**s, "lo": {k: _jsonable(v) for k, v in s["lo"].items()},
-                     "hi": {k: _jsonable(v) for k, v in s["hi"].items()}},
-                    default=str))
-            yield pd.DataFrame({"s": out})
-
-    meta = spark.createDataFrame([(f,) for f in files], "path: string")
-    rows = meta.repartition(32).mapInPandas(batches, "s string").collect()
-    out = []
-    for r in rows:
-        d = _json.loads(r.s)
-        d["nulls"] = {int(k): v for k, v in d["nulls"].items()}
-        d["lo"] = {int(k): v for k, v in d["lo"].items()}
-        d["hi"] = {int(k): v for k, v in d["hi"].items()}
-        out.append(d)
-    return out
-
-
-def _jsonable(v):
-    import datetime as _dt
-
-    if isinstance(v, (_dt.date, _dt.datetime)):
-        return v.isoformat()
-    return v
-
-
-def _revive(v, ice_type: str):
-    """JSON round-trip → the python value encode_bound expects."""
-    import datetime as _dt
-
-    name = ice_types.primitive_name(ice_type)
-    if v is None or not isinstance(v, str):
-        return v
-    if name == "date":
-        return _dt.date.fromisoformat(v)
-    if name in ("timestamp", "timestamptz"):
-        return _dt.datetime.fromisoformat(v)
-    return v
 
 
 def build_name_mapping(schema_json: dict) -> str:
@@ -312,16 +136,12 @@ def add_files(
                           format_version=format_version)
 
     spec = tm.default_spec()
-    ident_parts: dict[str, str] = {}
     for pf in spec.fields:
         if pf.transform != "identity":
             raise NotImplementedError(
                 f"add_files: partition transform '{pf.transform}' cannot "
                 "be recovered from file paths; only identity specs are "
                 "importable")
-        hit = tm.field_path_by_id(pf.source_id)
-        if hit is not None:
-            ident_parts[pf.name] = hit[1]["type"]
 
     if check_duplicate_files:
         snap = tm.select_snapshot()
@@ -338,46 +158,31 @@ def add_files(
                     f"the table, e.g. {dup[0]!r} (pass "
                     "check_duplicate_files=False to force)")
 
-    fields = [(f["name"], f["id"], f["type"])
-              for f in tm.schema_json()["fields"]
-              if isinstance(f["type"], str)]
-
     # imported files rarely carry parquet field-ids → name-mapping read
+    schema_json = tm.schema_json()
     if "schema.name-mapping.default" not in tm.properties:
         tm.properties["schema.name-mapping.default"] = \
-            build_name_mapping(tm.schema_json())
+            build_name_mapping(schema_json)
 
-    stats = _collect_stats(spark, files, fields)
-    types_by_fid = {fid: it for _n, fid, it in fields}
-    new_files: list[mf.DataFile] = []
-    total_rows = 0
-    for s in stats:
-        lo = {}
-        hi = {}
-        for fid, v in s["lo"].items():
-            b = ice_types.encode_bound(
-                types_by_fid[fid], _revive(v, types_by_fid[fid]))
-            if b is not None:
-                lo[fid] = b
-        for fid, v in s["hi"].items():
-            b = ice_types.encode_bound(
-                types_by_fid[fid], _revive(v, types_by_fid[fid]))
-            if b is not None:
-                hi[fid] = b
-        part = (_parse_hive_partition(s["path"], ident_parts)
-                if ident_parts else {})
-        total_rows += s["rows"]
-        new_files.append(mf.DataFile(
-            content=mf.CONTENT_DATA,
-            file_path=s["path"],
-            file_format="PARQUET",
-            partition=part,
-            record_count=s["rows"],
-            file_size_in_bytes=s["size"],
-            null_value_counts={k: v for k, v in s["nulls"].items()} or None,
-            lower_bounds=lo or None,
-            upper_bounds=hi or None,
-        ))
+    stats = _collect_stats(
+        spark, files, ids_by_name={f["name"]: f["id"]
+                                   for f in schema_json["fields"]})
+    new_files = _build_data_files(stats, tm, spec, "")
+    unsafe = {f["id"] for f in schema_json["fields"]
+              if not isinstance(f["type"], str)
+              or ice_types.primitive_name(f["type"]) not in _BOUND_SAFE}
+    for d in new_files:
+        # a partitioned table must not silently import unpartitioned files
+        missing = sorted(pf.name for pf in spec.fields
+                         if pf.name not in d.partition)
+        if missing:
+            raise ValueError(
+                f"add_files: path {d.file_path!r} carries no hive-style "
+                f"value for partition column(s) {missing}")
+        d.lower_bounds = {k: v for k, v in (d.lower_bounds or {}).items()
+                          if k not in unsafe} or None
+        d.upper_bounds = {k: v for k, v in (d.upper_bounds or {}).items()
+                          if k not in unsafe} or None
 
     extra = {"added-via": "add_files"}
     for k, v in (snapshot_properties or {}).items():
@@ -385,5 +190,5 @@ def add_files(
     snap = commit_snapshot(tm, operation="append", new_data_files=new_files,
                            extra_summary=extra)
     return {"added_files_count": len(new_files),
-            "added_rows_count": total_rows,
+            "added_rows_count": sum(d.record_count for d in new_files),
             "snapshot_id": snap.snapshot_id}

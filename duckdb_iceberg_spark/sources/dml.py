@@ -39,7 +39,7 @@ from ..metadata import types as ice_types
 from ..metadata.table_metadata import TableMetadata, load_table_metadata
 from ..plans import predicates as P
 from ..plans.scan_plan import ScanPlan, plan_scan, _coerce_pred
-from .scan import scan_to_dataframe, _FILE_COL, _POS_COL, _norm_path, _norm_path_py
+from .scan import scan_to_dataframe, _FILE_COL, _POS_COL, _norm_path_py
 from .writer import (
     _collect_stats,
     commit_snapshot,
@@ -478,13 +478,14 @@ def _shape_delete_keys(rows: DataFrame, key_columns: list[str], n: int) -> DataF
             .sortWithinPartitions(*key_columns))
 
 
-def _write_eq_delete_files(spark, tm, rows, out_dir, proj_fields):
+def _write_eq_delete_files(spark, tm, rows, out_dir, proj_fields, eq_ids):
     """Write equality-delete KEY rows in the table's delete-file format
     (r14): ``write.delete.format.default`` = parquet (default) or avro —
     the avro side is the Flink-connector shape (its avro tables write
     avro equality deletes; the reference reads/writes neither). Returns
-    (stats, file_format). Avro stats skip bounds for NESTED key
-    projections (absent bounds only cost pruning, never correctness)."""
+    the delete-file entries; their stats come from the data files' stats
+    path. Avro stats skip bounds for NESTED key projections (absent
+    bounds only cost pruning, never correctness)."""
     dfmt = (tm.properties.get("write.delete.format.default")
             or "parquet").lower()
     if dfmt == "avro":
@@ -492,14 +493,26 @@ def _write_eq_delete_files(spark, tm, rows, out_dir, proj_fields):
 
         stats = write_avro_dataset(spark, rows, out_dir,
                                    {"fields": proj_fields})
-        return [st for st in stats if st["record_count"]], "AVRO"
-    if dfmt != "parquet":
+    elif dfmt == "parquet":
+        stats = _collect_stats(spark, write_parquet_dataset(spark, rows, out_dir))
+    else:
         raise NotImplementedError(
             f"write.delete.format.default={dfmt!r} unsupported for "
             "equality-delete writes; supported: 'parquet', 'avro'")
-    paths = write_parquet_dataset(spark, rows, out_dir)
-    return ([st for st in _collect_stats(spark, paths)
-             if st["record_count"]], "PARQUET")
+    types_by_fid = {fid: tm.field_path_by_id(fid)[1]["type"] for fid in eq_ids}
+    return [mf.DataFile(
+        content=mf.CONTENT_EQUALITY_DELETES,
+        file_path=st["path"], file_format=dfmt.upper(), partition={},
+        record_count=st["record_count"], file_size_in_bytes=st["file_size"],
+        lower_bounds={fid: b for fid, v in st["mins"].items()
+                      if (b := _stat_bound(v, types_by_fid.get(fid)))
+                      is not None} or None,
+        upper_bounds={fid: b for fid, v in st["maxs"].items()
+                      if (b := _stat_bound(v, types_by_fid.get(fid)))
+                      is not None} or None,
+        null_value_counts=st["null_counts"] or None,
+        equality_ids=eq_ids,
+    ) for st in stats if st["record_count"]]
 
 
 def equality_delete(
@@ -600,35 +613,11 @@ def equality_delete(
         .dropDuplicates().persist()
     try:
         n = rows.count()
-        stats, dfile_fmt = _write_eq_delete_files(
+        delete_files = _write_eq_delete_files(
             spark, tm, _shape_delete_keys(rows, top_cols, n), out_dir,
-            _project_fields(tree, schema_json["fields"]))
+            _project_fields(tree, schema_json["fields"]), eq_ids)
     finally:
         rows.unpersist()
-    types_by_fid = {f["id"]: f["type"] for f in leaves}
-    delete_files = []
-    for st in stats:
-        lower, upper = {}, {}
-        for fid, v in st["mins"].items():
-            b = _stat_bound(v, types_by_fid.get(fid))
-            if b is not None:
-                lower[fid] = b
-        for fid, v in st["maxs"].items():
-            b = _stat_bound(v, types_by_fid.get(fid))
-            if b is not None:
-                upper[fid] = b
-        delete_files.append(mf.DataFile(
-            content=mf.CONTENT_EQUALITY_DELETES,
-            file_path=st["path"],
-            file_format=dfile_fmt,
-            partition={},
-            record_count=st["record_count"],
-            file_size_in_bytes=st["file_size"],
-            lower_bounds=lower or None,
-            upper_bounds=upper or None,
-            null_value_counts=st["null_counts"] or None,
-            equality_ids=eq_ids,
-        ))
     if not delete_files:
         return tm
     commit_snapshot(tm, operation="delete", new_delete_files=delete_files,
@@ -663,27 +652,12 @@ def upsert_equality(
     ]).dropDuplicates().persist()
     try:
         n = keys.count()
-        stats, dfile_fmt = _write_eq_delete_files(
+        delete_files = _write_eq_delete_files(
             spark, tm, _shape_delete_keys(keys, key_columns, n), out_dir,
             [{"id": by_name[c]["id"], "name": c, "required": False,
-              "type": by_name[c]["type"]} for c in key_columns])
+              "type": by_name[c]["type"]} for c in key_columns], eq_ids)
     finally:
         keys.unpersist()
-    types_by_fid = {by_name[c]["id"]: by_name[c]["type"] for c in key_columns}
-    delete_files = []
-    for st in stats:
-        lower = {fid: b for fid, v in st["mins"].items()
-                 if (b := _stat_bound(v, types_by_fid.get(fid))) is not None}
-        upper = {fid: b for fid, v in st["maxs"].items()
-                 if (b := _stat_bound(v, types_by_fid.get(fid))) is not None}
-        delete_files.append(mf.DataFile(
-            content=mf.CONTENT_EQUALITY_DELETES,
-            file_path=st["path"], file_format=dfile_fmt, partition={},
-            record_count=st["record_count"], file_size_in_bytes=st["file_size"],
-            lower_bounds=lower or None, upper_bounds=upper or None,
-            null_value_counts=st["null_counts"] or None,
-            equality_ids=eq_ids,
-        ))
     new_files, _root = write_data_files(spark, df, tm)
     commit_snapshot(tm, operation="overwrite",
                     new_data_files=new_files, new_delete_files=delete_files,

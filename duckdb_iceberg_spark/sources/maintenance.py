@@ -22,7 +22,7 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
-from ..jrpc import local_frame
+from ..jrpc import local_frame, select_exprs
 from ..metadata import manifest as mf
 from ..metadata.table_metadata import (
     TableMetadata,
@@ -717,7 +717,7 @@ def rewrite_position_delete_files(
     from ..io import normalize_path
     from ..plans.scan_plan import _localize, manifests_for_snapshot
     from .dml import _resolve_target, _write_row_deletes
-    from .scan import _norm_path
+    from .scan import _norm_path_sql
 
     if min_input_files < 1:
         raise ValueError("min_input_files must be >= 1")
@@ -797,10 +797,9 @@ def rewrite_position_delete_files(
         from .scan import _read_delete_files
 
         by_path = {_localize(tm, d.file_path): d.file_format for d in cand}
-        rows = (
-            _read_delete_files(spark, by_path, "file_path string, pos long")
-            .select(_norm_path(F.col("file_path")).alias("file_path"),
-                    "pos"))
+        rows = select_exprs(
+            _read_delete_files(spark, by_path, "file_path string, pos long"),
+            [_norm_path_sql("file_path") + " AS file_path", "pos"])
         live_df = F.broadcast(local_frame(
             spark, [(p,) for p in sorted(live)], "file_path: string"))
         kept = rows.join(live_df, "file_path", "left_semi").distinct()

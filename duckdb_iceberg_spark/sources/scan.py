@@ -109,33 +109,20 @@ def _residual_filter(df: DataFrame, residual: str) -> DataFrame:
     return df.filter(F.expr(residual))
 
 
-def _norm_path(col):
-    # Scheme canonicalization for RAW (manifest-spelled) path columns:
-    # s3a:// (the Hadoop-native rewrite of s3://) normalizes back so join
-    # keys match across writers; file: URIs become plain paths. MUST stay in
-    # lockstep with _norm_path_py below — every path-equality join in this
-    # module has one side built Spark-side and one side from manifest
-    # strings.
-    return F.regexp_replace(
-        F.regexp_replace(col, r"^file:/+", "/"), r"^s3a://", "s3://")
-
-
-def _norm_uri_path(col):
-    # For Spark's ``_metadata.file_path``, which is a URI: percent-encoded
-    # (a literal '%3A' in a directory name arrives as '%253A'). Decode back
-    # to the raw path so it joins against manifest-recorded spellings.
-    # url_decode turns '+' into space, so protect literal '+' first.
-    return F.url_decode(
-        F.regexp_replace(_norm_path(col), r"\+", "%2B"))
-
-
-#: SQL-string twins of _norm_path/_norm_uri_path (r16): scan construction
-#: batches projections into single selectExpr round-trips (guide §1.2 —
-#: driver chatter is serial latency at any cluster size), so the path
-#: normalizations need SQL spellings. The regexes avoid backslash escapes
-#: ('[+]' not '\\+') so the strings parse identically whether or not a
-#: session sets spark.sql.parser.escapedStringLiterals. MUST stay in
-#: lockstep with the Column versions above (pinned by
+#: Path normalization for Spark-side path columns, as SQL strings so scan
+#: construction batches projections into single selectExpr round-trips
+#: (guide §1.2 — driver chatter is serial latency at any cluster size).
+#: _norm_path_sql canonicalizes RAW (manifest-spelled) paths: s3a:// (the
+#: Hadoop-native rewrite of s3://) normalizes back so join keys match
+#: across writers; file: URIs become plain paths. _norm_uri_path_sql is
+#: for Spark's ``_metadata.file_path``, a percent-encoded URI (a literal
+#: '%3A' in a directory name arrives as '%253A'): it decodes back to the
+#: raw path, protecting literal '+' first (url_decode turns '+' into a
+#: space). The regexes avoid backslash escapes ('[+]' not '\\+') so the
+#: strings parse identically whether or not a session sets
+#: spark.sql.parser.escapedStringLiterals. MUST stay in lockstep with
+#: _norm_path_py below — every path-equality join in this module has one
+#: side built Spark-side and one side from manifest strings (pinned by
 #: tests/test_scan_rpc_batching.py).
 def _norm_path_sql(col_sql: str) -> str:
     return ("regexp_replace(regexp_replace(" + col_sql +
@@ -156,7 +143,7 @@ def _replace_col_sql(df: DataFrame, col: str, expr_sql: str) -> DataFrame:
 
 
 def _norm_path_py(p: str) -> str:
-    """Python twin of :func:`_norm_path` for manifest-derived literals
+    """Python twin of :func:`_norm_path_sql` for manifest-derived literals
     (sequence-number maps, equality-delete applicability pairs, row-lineage
     maps, partition-constant maps). Manifests written through s3a:// (or
     file:) URIs would otherwise never join against the normalized scan-side
@@ -247,7 +234,8 @@ def _read_delete_files(spark, delete_files, schema, *, with_path_pos=False,
                                  path_col=path_col, pos_col=pos_col,
                                  file_format=fmt.lower())
             if with_path_pos:
-                p = p.withColumn(path_col, _norm_path(F.col(path_col)))
+                p = _replace_col_sql(p, path_col,
+                                     _norm_path_sql(_jx.quote_name(path_col)))
             parts.append(p)
         else:
             raise NotImplementedError(
@@ -979,8 +967,10 @@ def _read_by_name_mapping(
             if need_pos:
                 # resolve the hidden _metadata column while the plan leaf is
                 # still the file scan, before the rename projection drops it
-                raw = raw.withColumn(_FILE_COL, _norm_uri_path(F.col("_metadata.file_path"))) \
-                         .withColumn(_POS_COL, F.col("_metadata.row_index"))
+                raw = _jx.select_exprs(raw, [
+                    "*", _norm_uri_path_sql("_metadata.file_path")
+                    + " AS " + _FILE_COL,
+                    "_metadata.row_index AS " + _POS_COL])
         else:
             # one layout signature per group → the first file's footer schema
             # holds for the whole group
@@ -989,7 +979,8 @@ def _read_by_name_mapping(
                                    with_path_pos=need_pos,
                                    path_col=_FILE_COL, pos_col=_POS_COL)
             if need_pos:
-                raw = raw.withColumn(_FILE_COL, _norm_path(F.col(_FILE_COL)))
+                raw = _replace_col_sql(raw, _FILE_COL,
+                                       _norm_path_sql(_FILE_COL))
         file_st = T.StructType(
             [fl for fl in raw.schema.fields if fl.name not in (_FILE_COL, _POS_COL)])
         sel = [

@@ -5,11 +5,12 @@ The PySpark re-expression of the reference's INSERT/CTAS sink
 projection (GetTransformExpression, :403-475) becomes `withColumn` of
 transform Columns, the sort order (:497-511) becomes `sortWithinPartitions`,
 the parquet copy becomes `df.write.partitionBy(...)`, per-file stats
-(AddFiles, :150-237) are collected from parquet footers — distributed via
-mapInPandas when the file count is large, so the driver never holds
-data-sized state — and Finalize (:286-329) becomes manifest + manifest-list
-+ metadata-JSON commit (COPY TO FORMAT ICEBERG analogue,
-src/function/copy/iceberg_copy_function.cpp:11-31).
+(AddFiles, :150-237) are collected from parquet footers — distributed over
+the executors when the file count is large, so the driver never holds
+data-sized state; written, delete and imported (add_files) files share
+that one stats path and one DataFile builder — and Finalize (:286-329)
+becomes manifest + manifest-list + metadata-JSON commit (COPY TO FORMAT
+ICEBERG analogue, src/function/copy/iceberg_copy_function.cpp:11-31).
 
 Scale notes (100 TB design):
 - data movement is one Spark write job; `repartition(partition_cols)`
@@ -198,12 +199,18 @@ def create_table(
 
 
 # ---------------------------------------------------------------------------
-# parquet footer stats → DataFile entries
+# data file stats → DataFile entries
 # ---------------------------------------------------------------------------
 
-def _footer_stats_one(path: str, fs_io=None) -> dict:
+def _footer_stats_one(path: str, fs_io=None,
+                      ids_by_name: dict[str, int] | None = None) -> dict:
     """Read one parquet footer: row count, size, per-field-id stats — via
-    the FileIO (a footer read is one ranged GET on object stores)."""
+    the FileIO (a footer read is one ranged GET on object stores). A
+    top-level column is keyed by its parquet field-id, or, when the file
+    carries none for it (imported files), by its name in ``ids_by_name``.
+    A column gets bounds only if every row group carries min/max for it,
+    and a null count only if every row group carries one: a row group
+    without stats may hold any value."""
     import pyarrow.parquet as pq
 
     from ..io import get_io
@@ -212,41 +219,45 @@ def _footer_stats_one(path: str, fs_io=None) -> dict:
     fs_io = fs_io or get_io(path)
     pf = pq.ParquetFile(_open_arrow_input(fs_io, path))
     meta = pf.metadata
-    arrow_schema = pf.schema_arrow
-    fid_by_col: dict[str, int] = {}
-    for field in arrow_schema:
-        fid = None
+    fid_by_col = dict(ids_by_name or {})
+    for field in pf.schema_arrow:
         if field.metadata and b"PARQUET:field_id" in field.metadata:
-            fid = int(field.metadata[b"PARQUET:field_id"])
-        if fid is not None:
-            fid_by_col[field.name] = fid
+            fid_by_col[field.name] = int(field.metadata[b"PARQUET:field_id"])
 
     value_counts: dict[int, int] = {}
     null_counts: dict[int, int] = {}
     col_sizes: dict[int, int] = {}
     mins: dict[int, Any] = {}
     maxs: dict[int, Any] = {}
+    no_nulls: set[int] = set()
+    no_bounds: set[int] = set()
     for rg in range(meta.num_row_groups):
         g = meta.row_group(rg)
         for ci in range(g.num_columns):
             c = g.column(ci)
-            top = c.path_in_schema.split(".")[0]
-            fid = fid_by_col.get(top)
+            fid = fid_by_col.get(c.path_in_schema)
             if fid is None or "." in c.path_in_schema:
                 continue
             value_counts[fid] = value_counts.get(fid, 0) + c.num_values
             col_sizes[fid] = col_sizes.get(fid, 0) + c.total_compressed_size
             st = c.statistics
-            if st is None:
-                continue
-            if st.has_null_count:
+            if st is not None and st.has_null_count:
                 null_counts[fid] = null_counts.get(fid, 0) + st.null_count
-            if st.has_min_max:
+            else:
+                no_nulls.add(fid)
+            if st is not None and st.has_min_max:
                 mn, mx = st.min, st.max
                 if fid not in mins or _stat_lt(mn, mins[fid]):
                     mins[fid] = mn
                 if fid not in maxs or _stat_lt(maxs[fid], mx):
                     maxs[fid] = mx
+            else:
+                no_bounds.add(fid)
+    for fid in no_nulls:
+        null_counts.pop(fid, None)
+    for fid in no_bounds:
+        mins.pop(fid, None)
+        maxs.pop(fid, None)
     return {
         "path": path,
         "record_count": meta.num_rows,
@@ -266,13 +277,46 @@ def _stat_lt(a: Any, b: Any) -> bool:
         return False
 
 
-def _collect_stats(spark: SparkSession, paths: list[str]) -> list[dict]:
+def _file_stats(path: str, fs_io=None, footer: bool = True,
+                ids_by_name: dict[str, int] | None = None) -> dict:
+    """One file's stats dict: its parquet footer when ``footer``; else —
+    an ORC file, or a footer pyarrow cannot parse (logical types it
+    predates, e.g. Spark's VariantType) — only its size, with
+    ``record_count`` None for :func:`_aggregate_stats` to fill."""
+    from ..io import get_io
+
+    fs_io = fs_io or get_io(path)
+    if footer:
+        try:
+            return _footer_stats_one(path, fs_io, ids_by_name)
+        except Exception:
+            pass
+    return {
+        "path": path, "record_count": None, "file_size": fs_io.size(path),
+        "value_counts": {}, "null_counts": {}, "col_sizes": {},
+        "mins": {}, "maxs": {}, "nan_counts": {},
+    }
+
+
+def _collect_stats(spark: SparkSession, paths: list[str], *,
+                   file_format: str = "parquet",
+                   tm: TableMetadata | None = None,
+                   ids_by_name: dict[str, int] | None = None) -> list[dict]:
+    """Stats dicts for written, delete or imported data files: parquet
+    footers on a driver thread pool, or on the executors from
+    ``_DISTRIBUTED_STATS_THRESHOLD`` files up; files left without footer
+    stats (every ORC file — ``tm`` gives their columns — and parquet
+    footers pyarrow cannot parse) then share one Spark aggregate."""
     from ..io import get_io, io_from_storage_options, storage_options_for
 
     if not paths:
         return []
+    footer = file_format == "parquet"
     if (not get_io(paths[0]).shippable
             or len(paths) < _DISTRIBUTED_STATS_THRESHOLD):
+        def one(p):
+            return _file_stats(p, None, footer, ids_by_name)
+
         if len(paths) > 4:
             # footer reads are IO + C-side parquet parsing (GIL released):
             # a thread pool cuts the driver-side stats pass ~5× on
@@ -280,83 +324,123 @@ def _collect_stats(spark: SparkSession, paths: list[str]) -> list[dict]:
             from concurrent.futures import ThreadPoolExecutor
 
             with ThreadPoolExecutor(max_workers=min(16, len(paths))) as ex:
-                out = list(ex.map(_footer_stats_safe, paths))
+                out = list(ex.map(one, paths))
         else:
-            out = [_footer_stats_safe(p) for p in paths]
+            out = [one(p) for p in paths]
     else:
         # distributed footer reads: executors each open only footers
         opts = storage_options_for(paths[0])
 
         def one(p):
-            return _footer_stats_safe(p, io_from_storage_options(opts))
+            return _file_stats(p, io_from_storage_options(opts), footer,
+                               ids_by_name)
 
         sc = spark.sparkContext
-        rdd = sc.parallelize(paths, min(len(paths), 256))
-        out = rdd.map(one).collect()
-    failed = [s["path"] for s in out if s.get("record_count") is None]
-    if failed:
-        # pyarrow can't parse footers holding logical types it predates
-        # (Spark's VariantType thrift tag): recover record counts with one
-        # Spark job over just those files; column stats stay absent
-        # (optional in the spec — pruning is conservatively disabled)
-        from pyspark.sql import functions as F
-
-        counts = {
-            r[0]: r[1]
-            for r in spark.read.parquet(*failed)
-            .groupBy(F.col("_metadata.file_path")).count().collect()
-        }
-        from ..io import normalize_path
-
-        def _norm_uri(k: str) -> str:
-            # Spark's _metadata.file_path is a percent-encoded URI (a space
-            # is '%20', ':' is '%3A'); manifest paths are plain. Decode
-            # before matching — scan.py's _norm_uri_path twin — or paths
-            # with encodable characters miss and silently corrupt
-            # record_count-derived answers (metadata count(*)).
-            return urllib.parse.unquote(normalize_path(k))
-
-        by_norm = {_norm_uri(k): v for k, v in counts.items()}
-        by_norm.update({k: v for k, v in counts.items()})
-        for s in out:
-            if s.get("record_count") is None:
-                n = by_norm.get(normalize_path(s["path"]),
-                                by_norm.get(s["path"]))
-                if n is None:
-                    # absent from the grouped counts: either a zero-row file
-                    # (groupBy emits no group for it) or a path-matching
-                    # miss. Confirm with a targeted read — a wrong
-                    # record_count poisons manifests (metadata-only count(*)
-                    # sums these), so never default to 0 on a real miss.
-                    n = spark.read.parquet(s["path"]).count()
-                    if n != 0:
-                        raise ValueError(
-                            f"footer stats unavailable and Spark row-count "
-                            f"recovery did not cover {s['path']!r} "
-                            f"(file has {n} rows)")
-                s["record_count"] = n
+        out = sc.parallelize(paths, min(len(paths), 256)).map(one).collect()
+    missing = [s for s in out if s["record_count"] is None]
+    if missing:
+        _aggregate_stats(spark, missing, file_format, tm)
     return out
 
 
-def _footer_stats_safe(path: str, fs_io=None) -> dict:
-    try:
-        return _footer_stats_one(path, fs_io)
-    except Exception:
-        from ..io import get_io
+def _aggregate_stats(spark: SparkSession, stats: list[dict],
+                     file_format: str, tm: TableMetadata | None) -> None:
+    """Fill in place the stats the footer pass could not read, with ONE
+    Spark aggregate grouped by ``_metadata.file_path``: record counts for
+    parquet files (column stats stay absent — optional in the spec, so
+    pruning is conservatively disabled), and for ORC — pyarrow exposes no
+    per-column ORC statistics — value/null/NaN counts and bounds too.
+    O(rows) map work with a #files-row result, exact, not truncated."""
+    from ..io import arrow_data as _ad
+    from .scan import _norm_path_py, _norm_uri_path_sql
 
-        io = fs_io or get_io(path)
-        return {
-            "path": path, "record_count": None, "file_size": io.size(path),
-            "value_counts": {}, "null_counts": {}, "col_sizes": {},
-            "mins": {}, "maxs": {},
-        }
+    stat_fields = []
+    if file_format == "orc":
+        # identity-partitioned source columns live in directory names, not
+        # in the file contents (partitionBy drops them) — aggregating them
+        # would record all-NULL stats that poison pruning; _build_data_files
+        # fills their bounds from the partition values instead
+        ident_ids = {pf.source_id for pf in tm.default_spec().fields
+                     if pf.transform == "identity"}
+        stat_fields = [
+            f for f in tm.schema_json()["fields"]
+            if isinstance(f["type"], str)
+            and f["id"] not in ident_ids
+            and ice_types.primitive_name(f["type"]) in _ORC_STAT_TYPES]
+    reader = spark.read.format(file_format)
+    if stat_fields:
+        reader = reader.schema(T.StructType([
+            T.StructField(f["name"], ice_types.iceberg_to_spark(f["type"]))
+            for f in stat_fields]))
+    aggs = [F.count(F.lit(1)).alias("__n")]
+    floats = set()
+    for f in stat_fields:
+        c = F.col(f["name"])
+        fid = f["id"]
+        if ice_types.primitive_name(f["type"]) in ("float", "double"):
+            # NaN handling mirrors parquet writers: a file containing ANY
+            # NaN in the column gets NO min/max (parquet-mr drops stats
+            # for NaN-polluted columns). Recording NaN as max poisons
+            # range pruning one way (NaN >= x false in the bounds truth
+            # table) while recording the NaN-filtered max loses NaN-only
+            # matches the other way (Spark evaluates NaN >= x as TRUE) —
+            # absent bounds are the only safe spelling, and nan counts
+            # land in nan_value_counts like the spec wants.
+            floats.add(fid)
+            aggs.append(F.sum(F.isnan(c).cast("long")).alias(f"__nan_{fid}"))
+            c = F.when(~F.isnan(c), c)
+        aggs.append(F.min(c).alias(f"__min_{fid}"))
+        aggs.append(F.max(c).alias(f"__max_{fid}"))
+        aggs.append(F.sum(F.col(f["name"]).isNull().cast("long"))
+                    .alias(f"__null_{fid}"))
+    src = reader.load([_ad.to_native_path(s["path"]) for s in stats])
+    # _metadata.file_path is a percent-encoded URI; the scan's SQL
+    # normalization decodes it to the plain spelling _norm_path_py gives
+    # the listed paths
+    by_path = {
+        r["__p"]: r for r in
+        src.groupBy(F.expr(_norm_uri_path_sql("_metadata.file_path"))
+                    .alias("__p")).agg(*aggs).collect()}
+    for s in stats:
+        r = by_path.get(_norm_path_py(s["path"]))
+        if r is None:
+            # absent from the groups: either a zero-row file (groupBy emits
+            # no group for it) or a path-matching miss. Confirm with a
+            # targeted read — a wrong record_count poisons manifests
+            # (metadata-only count(*) sums these), so never default to 0
+            # on a real miss.
+            n = spark.read.format(file_format).load(
+                _ad.to_native_path(s["path"])).count()
+            if n != 0:
+                raise ValueError(
+                    f"footer stats unavailable and Spark row-count "
+                    f"recovery did not cover {s['path']!r} "
+                    f"(file has {n} rows)")
+            s["record_count"] = 0
+            continue
+        s["record_count"] = n = int(r["__n"])
+        for f in stat_fields:
+            fid = f["id"]
+            s["value_counts"][fid] = n
+            s["null_counts"][fid] = int(r[f"__null_{fid}"] or 0)
+            if fid in floats and r[f"__nan_{fid}"]:
+                s["nan_counts"][fid] = int(r[f"__nan_{fid}"])
+                continue  # a NaN-polluted column gets NO bounds in this file
+            if r[f"__min_{fid}"] is not None:
+                s["mins"][fid] = r[f"__min_{fid}"]
+            if r[f"__max_{fid}"] is not None:
+                s["maxs"][fid] = r[f"__max_{fid}"]
 
 
 def _partition_values_from_path(path: str, data_root: str, spec: PartitionSpec,
                                 tm: TableMetadata) -> dict[str, Any]:
-    """Recover partition values from hive-style dirs written by partitionBy.
-    Plain prefix-strip, not os.path.relpath — normpath would mangle the
-    ``scheme://`` of object-store paths."""
+    """Recover partition values, keyed by spec field name, from the
+    hive-style dirs partitionBy writes. Directory keys follow the writer's
+    convention: the raw column name for an identity field on a top-level
+    column (write_data_files partitions on that column directly), the spec
+    field name for transforms and nested sources. Plain prefix-strip, not
+    os.path.relpath — normpath would mangle the ``scheme://`` of
+    object-store paths."""
     parent = os.path.dirname(path)
     root = data_root.rstrip("/")
     rel = parent[len(root):].lstrip("/") if parent.startswith(root) else parent
@@ -367,13 +451,15 @@ def _partition_values_from_path(path: str, data_root: str, spec: PartitionSpec,
             k, v = comp.split("=", 1)
             raw[k] = urllib.parse.unquote(v)
     for pf in spec.fields:
-        if pf.name not in raw:
+        src = tm.field_by_id(pf.source_id)
+        key = (src["name"] if src is not None and pf.transform == "identity"
+               else pf.name)
+        if key not in raw:
             continue
-        sval = raw[pf.name]
+        sval = raw[key]
         if sval == "__HIVE_DEFAULT_PARTITION__":
             values[pf.name] = None
             continue
-        src = tm.field_by_id(pf.source_id)
         if src is None:
             hit = tm.field_path_by_id(pf.source_id)  # nested source
             src = hit[1] if hit else None
@@ -767,22 +853,22 @@ def write_data_files(
     # (iceberg_multi_file_list.cpp:528-529); we additionally support ORC
     # through Spark's native ORC source.
     fmt = (tm.properties.get("write.format.default") or "parquet").lower()
-    if fmt == "parquet":
-        # parquet write properties (reference maps iceberg write props →
-        # parquet options, iceberg_insert.cpp:596-648)
-        codec = tm.properties.get("write.parquet.compression-codec", "zstd")
+    max_rows = _max_records_per_file(tm, schema_json)
+    if fmt in ("parquet", "orc"):
+        if fmt == "parquet":
+            # parquet write properties (reference maps iceberg write props
+            # → parquet options, iceberg_insert.cpp:596-648)
+            codec = tm.properties.get("write.parquet.compression-codec", "zstd")
+            options = _parquet_write_options(tm)
+        else:
+            codec = _orc_codec(
+                tm.properties.get("write.orc.compression-codec", "zlib"))
+            options = None
         paths = write_parquet_dataset(
             spark, df, data_root, compression=codec, partition_cols=part_cols,
-            max_records_per_file=_max_records_per_file(tm, schema_json),
-            parquet_options=_parquet_write_options(tm))
-        stats = _collect_stats(spark, paths)
-    elif fmt == "orc":
-        codec = tm.properties.get("write.orc.compression-codec", "zlib")
-        paths = write_orc_dataset(
-            spark, df, data_root, compression=_orc_codec(codec),
-            partition_cols=part_cols,
-            max_records_per_file=_max_records_per_file(tm, schema_json))
-        stats = _collect_stats_orc(spark, paths, schema_json, spec)
+            max_records_per_file=max_rows, parquet_options=options,
+            file_format=fmt)
+        stats = _collect_stats(spark, paths, file_format=fmt, tm=tm)
     elif fmt == "avro":
         # r13: the third format's WRITE side (pure-Python Iceberg-Avro
         # codec on the executors, in-pass stats). r14: transform
@@ -793,15 +879,14 @@ def write_data_files(
         # still refuse loudly.
         stats = write_avro_dataset(
             spark, df, data_root, schema_json,
-            partition_cols=part_cols,
-            max_records_per_file=_max_records_per_file(tm, schema_json))
+            partition_cols=part_cols, max_records_per_file=max_rows)
     else:
         raise NotImplementedError(
             f"Unsupported value {fmt!r} for 'write.format.default'; "
             "supported: 'parquet', 'orc' and 'avro'")
 
-    data_files = _build_data_files_with_names(stats, tm, spec, data_root,
-                                              file_format=fmt.upper())
+    data_files = _build_data_files(stats, tm, spec, data_root,
+                                   file_format=fmt.upper())
     if order.fields:
         # data files record the sort order they were written under (spec
         # `sort_order_id`; the reference's merge/insert tests assert it on
@@ -906,26 +991,33 @@ def write_parquet_dataset(
     partition_cols: list[str] | None = None,
     max_records_per_file: int | None = None,
     parquet_options: dict[str, str] | None = None,
+    file_format: str = "parquet",
 ) -> list[str]:
     """One write surface for every dataset the engine materializes (data
     files, positional/equality delete files): Spark-native
-    ``df.write.parquet`` when the scheme allows, otherwise the arrow data
-    plane streams parquet from the executors to the object store. Returns
-    the written file paths (listed through the FileIO either way)."""
+    ``df.write.format(file_format)`` when the scheme allows, otherwise the
+    arrow data plane streams parquet from the executors to the object
+    store (parquet only — ORC refuses non-native schemes). Returns the
+    written file paths (listed through the FileIO either way)."""
     from ..io import arrow_data as _ad
 
     if _ad.is_spark_native(spark, [out_dir]):
-        writer = df.write.mode("errorifexists").option("compression", compression)
+        writer = (df.write.mode("errorifexists").format(file_format)
+                  .option("compression", compression))
         if max_records_per_file:
             writer = writer.option("maxRecordsPerFile", max_records_per_file)
         for k, v in (parquet_options or {}).items():
             writer = writer.option(k, v)
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
-        writer.parquet(_ad.to_native_path(out_dir))
+        writer.save(_ad.to_native_path(out_dir))
         return sorted(
             e.path for e in fio.get_io(out_dir).list_files(out_dir)
-            if e.path.endswith(".parquet"))
+            if e.path.endswith("." + file_format))
+    if file_format != "parquet":
+        raise NotImplementedError(
+            f"{file_format.upper()} data files require a Spark-native path "
+            "scheme (the arrow data plane streams parquet only)")
     return _ad.write_parquet(spark, df, out_dir, compression=compression,
                              partition_cols=partition_cols)
 
@@ -942,34 +1034,6 @@ def _orc_codec(prop: str) -> str:
             f"Unsupported value {prop!r} for 'write.orc.compression-codec'; "
             "supported: 'zlib', 'snappy', 'zstd', 'lz4', 'lzo', 'none'")
     return mapping[v]
-
-
-def write_orc_dataset(
-    spark: SparkSession,
-    df: DataFrame,
-    out_dir: str,
-    *,
-    compression: str = "zlib",
-    partition_cols: list[str] | None = None,
-    max_records_per_file: int | None = None,
-) -> list[str]:
-    """ORC twin of write_parquet_dataset (Spark-native schemes only — the
-    arrow data plane streams parquet, not ORC)."""
-    from ..io import arrow_data as _ad
-
-    if not _ad.is_spark_native(spark, [out_dir]):
-        raise NotImplementedError(
-            "ORC data files require a Spark-native path scheme (the arrow "
-            "data plane streams parquet only)")
-    writer = df.write.mode("errorifexists").option("compression", compression)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.orc(_ad.to_native_path(out_dir))
-    return sorted(
-        e.path for e in fio.get_io(out_dir).list_files(out_dir)
-        if e.path.endswith(".orc"))
 
 
 #: iceberg primitive types whose ORC min/max from a Spark aggregate are
@@ -1456,141 +1520,6 @@ def write_avro_dataset(
                            for k, v in st.get("nans", {}).items()},
         })
     return out
-
-
-def _collect_stats_orc(spark: SparkSession, paths: list[str],
-                       schema_json: dict,
-                       spec: PartitionSpec | None = None) -> list[dict]:
-    """Per-file stats for ORC data files. pyarrow can read ORC metadata but
-    exposes no per-column statistics, so bounds/null-counts come from ONE
-    distributed Spark aggregate grouped by ``_metadata.file_path`` — O(rows)
-    map work with a #files-row result, the same boundedness as the parquet
-    footer pass (and exact, not footer-truncated)."""
-    if not paths:
-        return []
-    from ..io import get_io, normalize_path
-
-    io = get_io(paths[0])
-    if len(paths) > 4:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(16, len(paths))) as ex:
-            sizes = dict(zip(paths, ex.map(io.size, paths)))
-    else:
-        sizes = {p: io.size(p) for p in paths}
-
-    from ..io import arrow_data as _ad
-    from ..metadata import types as ice_types
-
-    # identity-partitioned source columns live in directory names, not in
-    # the file contents (partitionBy drops them) — aggregating them would
-    # record all-NULL stats that poison pruning; _build_data_files fills
-    # their bounds from the partition values instead (Java-writer parity)
-    ident_ids = {pf.source_id for pf in (spec.fields if spec else [])
-                 if pf.transform == "identity"}
-    stat_fields = [
-        f for f in schema_json["fields"]
-        if isinstance(f["type"], str)
-        and f["id"] not in ident_ids
-        and ice_types.primitive_name(f["type"]) in _ORC_STAT_TYPES]
-    read_st = T.StructType([
-        T.StructField(f["name"], ice_types.iceberg_to_spark(f["type"]), True)
-        for f in stat_fields])
-    src = spark.read.schema(read_st).orc(
-        [_ad.to_native_path(p) for p in paths])
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for f in stat_fields:
-        c = F.col(f["name"])
-        fid = f["id"]
-        if ice_types.primitive_name(f["type"]) in ("float", "double"):
-            # NaN handling mirrors parquet writers: a file containing ANY
-            # NaN in the column gets NO min/max (parquet-mr drops stats
-            # for NaN-polluted columns). Recording NaN as max poisons
-            # range pruning one way (NaN >= x false in the bounds truth
-            # table) while recording the NaN-filtered max loses NaN-only
-            # matches the other way (Spark evaluates NaN >= x as TRUE) —
-            # absent bounds are the only safe spelling, and nan counts
-            # land in nan_value_counts like the spec wants.
-            sc = F.when(~F.isnan(c), c)
-            aggs.append(F.min(sc).alias(f"__min_{fid}"))
-            aggs.append(F.max(sc).alias(f"__max_{fid}"))
-            aggs.append(F.sum(F.isnan(c).cast("long"))
-                        .alias(f"__nan_{fid}"))
-        else:
-            aggs.append(F.min(c).alias(f"__min_{fid}"))
-            aggs.append(F.max(c).alias(f"__max_{fid}"))
-        aggs.append(F.sum(c.isNull().cast("long")).alias(f"__null_{fid}"))
-    grouped = (src.groupBy(F.col("_metadata.file_path").alias("__p"))
-               .agg(*aggs).collect())
-    by_path = {
-        urllib.parse.unquote(normalize_path(r["__p"])): r for r in grouped}
-
-    out = []
-    for p in paths:
-        r = by_path.get(normalize_path(p))
-        if r is None:
-            # a file absent from the grouped counts is zero-row; Spark
-            # skips it in the scan entirely
-            out.append({"path": p, "record_count": 0, "file_size": sizes[p],
-                        "value_counts": {}, "null_counts": {},
-                        "col_sizes": {}, "mins": {}, "maxs": {}})
-            continue
-        mins: dict[int, Any] = {}
-        maxs: dict[int, Any] = {}
-        nulls: dict[int, int] = {}
-        vcounts: dict[int, int] = {}
-        nans: dict[int, int] = {}
-        for f in stat_fields:
-            fid = f["id"]
-            vcounts[fid] = int(r["__n"])
-            nulls[fid] = int(r[f"__null_{fid}"] or 0)
-            n_nan = int(r[f"__nan_{fid}"] or 0) \
-                if ice_types.primitive_name(f["type"]) in ("float",
-                                                           "double") else 0
-            if n_nan:
-                nans[fid] = n_nan
-                # a NaN-polluted column gets NO bounds in this file
-                # (parquet-writer parity — see the aggregate above)
-                continue
-            if r[f"__min_{fid}"] is not None:
-                mins[fid] = r[f"__min_{fid}"]
-            if r[f"__max_{fid}"] is not None:
-                maxs[fid] = r[f"__max_{fid}"]
-        out.append({"path": p, "record_count": int(r["__n"]),
-                    "file_size": sizes[p], "value_counts": vcounts,
-                    "null_counts": nulls, "col_sizes": {},
-                    "mins": mins, "maxs": maxs, "nan_counts": nans})
-    return out
-
-
-def _build_data_files_with_names(stats, tm, spec, data_root, *,
-                                 file_format: str = "PARQUET"):
-    # Directory component keys are the raw column name for identity fields
-    # (we partitionBy the raw column) and the spec field name for derived
-    # transforms; parse with those keys, then rename to spec field names.
-    by_id = {f["id"]: f for f in tm.schema_json()["fields"]}
-    spec_for_parse = PartitionSpec(
-        spec.spec_id,
-        [
-            PartitionField(
-                pf.source_id,
-                pf.field_id,
-                (by_id[pf.source_id]["name"] if pf.transform == "identity" and pf.source_id in by_id else pf.name),
-                pf.transform,
-            )
-            for pf in spec.fields
-        ],
-    )
-    raw = _build_data_files(stats, tm, spec_for_parse, data_root,
-                            file_format=file_format)
-    # rename partition keys back to spec field names
-    name_map = {
-        (by_id[pf.source_id]["name"] if pf.transform == "identity" and pf.source_id in by_id else pf.name): pf.name
-        for pf in spec.fields
-    }
-    for d in raw:
-        d.partition = {name_map.get(k, k): v for k, v in d.partition.items()}
-    return raw
 
 
 # ---------------------------------------------------------------------------

@@ -114,6 +114,36 @@ def test_add_files_hive_partitions(spark, sf_dir, tmp_path):
         want.agg(F.sum("n_chars")).first()[0]
 
 
+def test_add_files_timestamp_identity_partition(spark, tmp_path):
+    """Spark renders a TIMESTAMP partition value as '2024-01-01 03:04:05'
+    in the directory name; the import parses it with the writer's own
+    partition parser (hive NULL included) and scans back the exact rows."""
+    src = spark.range(9).selectExpr(
+        "id", "CAST(id AS STRING) AS s",
+        "CASE id % 3 WHEN 0 THEN TIMESTAMP'2024-01-01 03:04:05' "
+        "WHEN 1 THEN TIMESTAMP'2024-06-30 23:59:59.5' END AS p")
+    raw = str(tmp_path / "hive_ts")
+    old = spark.conf.get("spark.sql.parquet.fieldId.write.enabled")
+    spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "false")
+    try:
+        src.write.partitionBy("p").mode("overwrite").parquet(raw)
+    finally:
+        spark.conf.set("spark.sql.parquet.fieldId.write.enabled", old)
+
+    loc = str(tmp_path / "t_hive_ts")
+    from duckdb_iceberg_spark.sources.writer import create_table
+
+    create_table(loc, src.schema, partition_by=["p"])
+    out = add_files(spark, loc, raw)
+    assert out["added_rows_count"] == 9
+    cols = src.columns
+    assert sorted(map(tuple, iceberg_scan(spark, loc).select(*cols).collect()),
+                  key=str) == \
+        sorted(map(tuple, src.select(*cols).collect()), key=str)
+    got = iceberg_scan(spark, loc, where="p = TIMESTAMP'2024-01-01 03:04:05'")
+    assert sorted(r.id for r in got.collect()) == [0, 3, 6]
+
+
 def test_add_files_duplicate_guard_and_append(spark, sf_dir, tmp_path):
     src = load(spark, sf_dir, "region")
     a = _plain_parquet(spark, src.filter("r_regionkey < 3"),
@@ -170,10 +200,11 @@ def test_build_name_mapping_nested():
 
 def test_add_files_distributed_stats_fanout(spark, sf_dir, tmp_path,
                                             monkeypatch):
-    """The footer-stat collection takes the mapInPandas executor path
-    above the cutoff (forced down to 2 here): same entries, same bounds,
-    pruning still works after the JSON round-trip."""
+    """The footer-stat collection takes the writer's executor path above
+    its cutoff (forced down to 2 here): same entries, same bounds,
+    pruning still works on executor-collected stats."""
     from duckdb_iceberg_spark.sources import add_files as af_mod
+    from duckdb_iceberg_spark.sources import writer as writer_mod
 
     df = spark.range(0, 400).selectExpr(
         "id", "CAST(id AS STRING) AS s", "CAST(id AS DOUBLE) AS d")
@@ -183,7 +214,7 @@ def test_add_files_distributed_stats_fanout(spark, sf_dir, tmp_path,
             spark, df.filter(f"id >= {i*100} AND id < {(i+1)*100}"),
             str(tmp_path / f"part{i}"), 1)
 
-    monkeypatch.setattr(af_mod, "_STATS_DRIVER_MAX", 2)
+    monkeypatch.setattr(writer_mod, "_DISTRIBUTED_STATS_THRESHOLD", 2)
     loc = str(tmp_path / "t_fanout")
     out = af_mod.add_files(spark, loc, files)
     assert out["added_files_count"] == 4

@@ -20,7 +20,6 @@ ALLOWED = {
     ("jrpc.py", "local_frame"): 2,  # the helper itself
     ("sources/scan.py", "_sniff_footers"): 1,  # footer sniff fan-out
     ("sources/scan.py", "_dv_positions_df"): 1,  # DV decode past 64 blobs
-    ("sources/add_files.py", "_collect_stats"): 1,  # footer stats fan-out
     ("io/arrow_data.py", "read_parquet"): 1,  # executor-side file reads
 }
 

@@ -163,6 +163,31 @@ def test_footer_stats_recovery_url_encoded_path(spark, sf_dir, tmp_path, monkeyp
     assert iceberg_scan(spark, loc).count() == src.count()
 
 
+def test_row_group_without_stats_gives_no_bounds(spark, tmp_path):
+    """parquet-mr writes no min/max and no null count for a row group whose
+    value is too long to record (here row 0, 5000 chars, alone in row
+    group 0 of 4). The file's bounds must then be absent, not taken from
+    the other row groups — [a100, a399] would prune the one row matching
+    s >= 'y' — and its null count must be absent, not undercounted."""
+    df = spark.range(400).coalesce(1).selectExpr(
+        "id", "CASE WHEN id = 0 THEN repeat('z', 5000) "
+              "ELSE concat('a', CAST(id AS STRING)) END AS s")
+    loc = str(tmp_path / "rg_nostats")
+    write_iceberg(df, loc, properties={
+        "write.parquet.row-group-size-bytes": "1"})
+    got = sorted(r.id for r in iceberg_scan(spark, loc, where="s >= 'y'").collect())
+    assert got == sorted(r.id for r in df.filter("s >= 'y'").collect()) == [0]
+    tm = load_table_metadata(loc)
+    (task,) = plan_scan(tm, tm.select_snapshot()).tasks
+    import pyarrow.parquet as pq
+
+    assert pq.ParquetFile(task.data_file.file_path).metadata.num_row_groups > 1
+    s_id = tm.schema_json()["fields"][1]["id"]
+    assert s_id not in (task.data_file.lower_bounds or {})
+    assert s_id not in (task.data_file.upper_bounds or {})
+    assert s_id not in (task.data_file.null_value_counts or {})
+
+
 def test_target_file_size_splits_insert_output(spark, tmp_path):
     """write.target-file-size-bytes sizes INSERT output files (reference:
     file_properties/test_target_file_size_bytes.test — 500k rows at a

@@ -3,14 +3,15 @@ spellings must be PLAN- and VALUE-identical to the chatty public-API
 spellings they replace — the optimization changes only how expressions
 cross the py4j boundary, never what they compute."""
 
+import urllib.parse
+
 import pyspark.sql.functions as F
 import pytest
 
 from duckdb_iceberg_spark import jrpc
 from duckdb_iceberg_spark.sources.scan import (
-    _norm_path,
+    _norm_path_py,
     _norm_path_sql,
-    _norm_uri_path,
     _norm_uri_path_sql,
     _replace_col_sql,
 )
@@ -26,18 +27,22 @@ TRICKY_PATHS = [
 ]
 
 
-def test_norm_path_sql_twin_matches_column_version(spark):
+def test_norm_path_sql_matches_python_twin(spark):
+    # Spark-side path columns join against manifest strings normalized by
+    # the Python twin: both spellings must agree on every input
     df = spark.createDataFrame([(p,) for p in TRICKY_PATHS], "p string")
-    col_side = df.select(_norm_path(F.col("p")).alias("n")).collect()
     sql_side = df.selectExpr(_norm_path_sql("p") + " AS n").collect()
-    assert [r["n"] for r in col_side] == [r["n"] for r in sql_side]
+    assert [r["n"] for r in sql_side] == [_norm_path_py(p) for p in TRICKY_PATHS]
 
 
-def test_norm_uri_path_sql_twin_matches_column_version(spark):
+def test_norm_uri_path_sql_matches_decoded_python_twin(spark):
+    # _metadata.file_path is a percent-encoded URI: the SQL spelling must
+    # give the plain path the Python twin gives its decoded form ('+' stays
+    # '+', it is not a form-encoded space)
     df = spark.createDataFrame([(p,) for p in TRICKY_PATHS], "p string")
-    col_side = df.select(_norm_uri_path(F.col("p")).alias("n")).collect()
     sql_side = df.selectExpr(_norm_uri_path_sql("p") + " AS n").collect()
-    assert [r["n"] for r in col_side] == [r["n"] for r in sql_side]
+    assert [r["n"] for r in sql_side] == \
+        [_norm_path_py(urllib.parse.unquote(p)) for p in TRICKY_PATHS]
 
 
 def test_select_exprs_matches_selectExpr_plan(spark):
